@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .ckpt import flat_local_checkpoint as _ckpt
+from .finisher import arrow_collect, arrow_frame, fits_driver
 
 
 def _large_star(sym: DataFrame) -> DataFrame:
@@ -63,33 +64,19 @@ def _small_star(edges: DataFrame) -> DataFrame:
 
 def _components_local(edges: DataFrame) -> DataFrame:
     """Driver-side min-label components over the collected edge
-    relation — the components twin of pagerank's ``_pagerank_local`` /
-    kcore's ``_local_finish``. Only reached when the caller measured
-    the deduplicated edge relation under ``local_max_edges``; the
-    collect is Arrow-batched into two int64 numpy columns (~16 B/edge)
-    and each pass is two vectorized ``minimum.at`` scatters plus one
-    pointer-jump, converging in O(log n) passes. Exact, not
+    relation — each pass is two vectorized ``minimum.at`` scatters
+    plus one pointer-jump, converging in O(log n) passes. Exact, not
     approximate: at the fixpoint every edge's endpoints share a label,
     labels only ever copy indices of same-component nodes, and a
     label can only decrease from self — so the shared label is the
     component's minimum node id, the distributed loop's contract."""
     import numpy as np
-    import pandas as pd
 
     spark = edges.sparkSession
-    arrow_key = "spark.sql.execution.arrow.pyspark.enabled"
-    prev_arrow = spark.conf.get(arrow_key, None)
-    spark.conf.set(arrow_key, "true")
-    try:
-        pdf = edges.select("u", "v").toPandas()
-    finally:
-        if prev_arrow is None:
-            spark.conf.unset(arrow_key)
-        else:
-            spark.conf.set(arrow_key, prev_arrow)
+    pdf = arrow_collect(edges.select("u", "v"))
     schema = "node long, component long"
     if len(pdf) == 0:
-        return spark.createDataFrame([], schema)
+        return arrow_frame(spark, {}, schema)
     ea = pdf["u"].to_numpy(dtype=np.int64)
     eb = pdf["v"].to_numpy(dtype=np.int64)
     nodes_arr, inv = np.unique(np.concatenate([ea, eb]), return_inverse=True)
@@ -103,9 +90,7 @@ def _components_local(edges: DataFrame) -> DataFrame:
         if np.array_equal(nxt, lab):
             break
         lab = nxt
-    return spark.createDataFrame(
-        pd.DataFrame({"node": nodes_arr, "component": nodes_arr[lab]}), schema
-    )
+    return arrow_frame(spark, {"node": nodes_arr, "component": nodes_arr[lab]}, schema)
 
 
 def connected_components(
@@ -113,7 +98,6 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_rounds: int = 16,
-    local_max_edges: int = 2_000_000,
 ) -> DataFrame:
     """Component assignment for every node of the pair graph.
 
@@ -125,28 +109,22 @@ def connected_components(
     stops at pairwise cluster labels); large-scale corpus dedup needs
     it, so it is part of the engine's beyond-reference surface.
 
-    LOCAL FINISHER (round 10; the pagerank/kcore recipe, guide §1.2):
-    each star round costs several shuffles + an eager checkpoint + a
-    signature action — ~1.2 s of fixed overhead per round regardless
-    of edge count, i.e. ~5 s for a 2,000-edge dedup graph. When the
-    DEDUPLICATED edge relation holds at most ``local_max_edges`` rows
-    (2M default ≈ 32 MB Arrow collect of two longs — same bound as
-    kcore/pagerank), the component labels are computed driver-side
-    instead (:func:`_components_local`); output is identical (integer
-    min-label algorithm, no float paths). Larger graphs run the
-    unchanged large-star/small-star loop; the count that gates the
+    LOCAL FINISHER (operators/finisher.py): each star round costs
+    several shuffles + an eager checkpoint + a signature action —
+    ~1.2 s of fixed overhead per round regardless of edge count, i.e.
+    ~5 s for a 2,000-edge dedup graph. A small DEDUPLICATED edge
+    relation gets its component labels driver-side instead
+    (:func:`_components_local`); output is identical (integer
+    min-label algorithm, no float paths). The count that gates the
     choice is read off the already-materialized checkpoint.
-    ``local_max_edges=0`` forces the distributed loop.
     """
-    if local_max_edges < 0:
-        raise ValueError(f"local_max_edges must be >= 0, got {local_max_edges}")
     edges = (
         pairs.select(F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v"))
         .where(F.col("u") != F.col("v"))
         .distinct()
         .transform(_ckpt)
     )
-    if local_max_edges and edges.count() <= local_max_edges:
+    if fits_driver("connected_components", edges.count()):
         return _components_local(edges)
     nodes = edges.select(F.col("u").alias("node")).unionByName(
         edges.select(F.col("v").alias("node"))
@@ -328,13 +306,10 @@ def canonicalize_by_score(
 
 def _resolve_roots_local(ptr: DataFrame) -> DataFrame | None:
     """Driver-side root+depth over the collected child->parent relation
-    — the directed-forest twin of :func:`_components_local`. Only
-    reached when the caller measured the checkpointed edge relation
-    under ``local_max_edges``; the collect is Arrow-batched into two
-    int64 numpy columns (~16 B/edge) and pointer doubling runs as
-    O(log chain) vectorized gather passes. Exact, not approximate:
-    integer algorithm, same doubling recurrence as the distributed
-    loop, so (node, root, depth) match row for row.
+    — the directed-forest twin of :func:`_components_local`: pointer
+    doubling runs as O(log chain) vectorized gather passes. Exact, not
+    approximate: integer algorithm, same doubling recurrence as the
+    distributed loop, so (node, root, depth) match row for row.
 
     Returns ``None`` — caller falls through to the distributed loop —
     when the collected edges are not a CLEAN forest (a duplicated
@@ -343,59 +318,42 @@ def _resolve_roots_local(ptr: DataFrame) -> DataFrame | None:
     for them.
     """
     import numpy as np
-    import pandas as pd
 
     spark = ptr.sparkSession
     schema = "node long, root long, depth int"
-    arrow_key = "spark.sql.execution.arrow.pyspark.enabled"
-    prev_arrow = spark.conf.get(arrow_key, None)
-    spark.conf.set(arrow_key, "true")
-    try:
-        pdf = ptr.select("node", "anc").toPandas()
-        if len(pdf) == 0:
-            return spark.createDataFrame([], schema)
-        if pdf["node"].isna().any() or pdf["anc"].isna().any():
-            # A null child/parent would become NaN here and wrap to
-            # INT64_MIN under to_numpy(int64) — a fabricated node id.
-            # The distributed loop DROPS null-anc rows; nulls therefore
-            # fall through so its semantics stay authoritative.
-            return None
-        ca = pdf["node"].to_numpy(dtype=np.int64)
-        pa = pdf["anc"].to_numpy(dtype=np.int64)
-        if np.unique(ca).size != len(ca):
-            return None  # duplicated child id: not a clean forest
-        ids, inv = np.unique(np.concatenate([ca, pa]), return_inverse=True)
-        ci, pi = inv[: len(ca)], inv[len(ca):]
-        n = len(ids)
-        anc = np.arange(n)
-        dep = np.zeros(n, dtype=np.int64)
-        anc[ci] = pi
-        dep[ci] = 1  # a self-loop edge keeps d=1 and never reaches a fixpoint
-        converged = False
-        for _ in range(64):  # depth < n <= 2M << 2^64; cycles never fix
-            na = anc[anc]
-            nd = dep + dep[anc]
-            if np.array_equal(na, anc) and np.array_equal(nd, dep):
-                converged = True
-                break
-            anc, dep = na, nd
-        if not converged:
-            return None  # cycle / self-loop: distributed loop adjudicates
-        return spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "node": ids,
-                    "root": ids[anc],
-                    "depth": dep.astype(np.int32),
-                }
-            ),
-            schema,
-        )
-    finally:
-        if prev_arrow is None:
-            spark.conf.unset(arrow_key)
-        else:
-            spark.conf.set(arrow_key, prev_arrow)
+    pdf = arrow_collect(ptr.select("node", "anc"))
+    if len(pdf) == 0:
+        return arrow_frame(spark, {}, schema)
+    if pdf["node"].isna().any() or pdf["anc"].isna().any():
+        # A null child/parent would become NaN here and wrap to
+        # INT64_MIN under to_numpy(int64) — a fabricated node id.
+        # The distributed loop DROPS null-anc rows; nulls therefore
+        # fall through so its semantics stay authoritative.
+        return None
+    ca = pdf["node"].to_numpy(dtype=np.int64)
+    pa = pdf["anc"].to_numpy(dtype=np.int64)
+    if np.unique(ca).size != len(ca):
+        return None  # duplicated child id: not a clean forest
+    ids, inv = np.unique(np.concatenate([ca, pa]), return_inverse=True)
+    ci, pi = inv[: len(ca)], inv[len(ca):]
+    n = len(ids)
+    anc = np.arange(n)
+    dep = np.zeros(n, dtype=np.int64)
+    anc[ci] = pi
+    dep[ci] = 1  # a self-loop edge keeps d=1 and never reaches a fixpoint
+    converged = False
+    for _ in range(64):  # depth < n <= 2M << 2^64; cycles never fix
+        na = anc[anc]
+        nd = dep + dep[anc]
+        if np.array_equal(na, anc) and np.array_equal(nd, dep):
+            converged = True
+            break
+        anc, dep = na, nd
+    if not converged:
+        return None  # cycle / self-loop: distributed loop adjudicates
+    return arrow_frame(
+        spark, {"node": ids, "root": ids[anc], "depth": dep.astype(np.int32)}, schema
+    )
 
 
 def resolve_roots(
@@ -403,7 +361,6 @@ def resolve_roots(
     child_col: str = "child",
     parent_col: str = "parent",
     max_rounds: int = 20,
-    local_max_edges: int = 2_000_000,
 ) -> DataFrame:
     """Root + depth for every node of a directed FOREST (each node has
     at most one parent): returns (node long, root long, depth int).
@@ -424,28 +381,24 @@ def resolve_roots(
     is O(longest-chain) sequential steps; doubling is why 10^9-message
     forests resolve in ~30 rounds.
 
-    LOCAL FINISHER (round 10; the pagerank/kcore/components recipe,
-    guide §1.2): each doubling round costs an equi-join + eager
-    checkpoint + a signature action — fixed scheduling cost per round
-    regardless of edge count. When the checkpointed edge relation
-    holds at most ``local_max_edges`` rows (2M default ≈ 16 B/edge
-    Arrow collect, the shared bound), roots and depths are computed
-    driver-side instead (:func:`_resolve_roots_local`); output is
-    identical (integer doubling, no float paths). Non-forest inputs
-    (duplicate children, cycles) fall through to the distributed loop,
-    which keeps its documented behavior for them. The edge relation is
+    LOCAL FINISHER (operators/finisher.py): each doubling round costs
+    an equi-join + eager checkpoint + a signature action — fixed
+    scheduling cost per round regardless of edge count. A small
+    checkpointed edge relation gets its roots and depths driver-side
+    instead (:func:`_resolve_roots_local`); output is identical
+    (integer doubling, no float paths). Non-forest inputs (duplicate
+    children, cycles) fall through to the distributed loop, which
+    keeps its documented behavior for them. The edge relation is
     checkpointed BEFORE the root derivation either way, so the
     upstream plan (often a window + filter) executes once, not three
-    times. ``local_max_edges=0`` forces the distributed loop.
+    times.
     """
-    if local_max_edges < 0:
-        raise ValueError(f"local_max_edges must be >= 0, got {local_max_edges}")
     ptr = edges.select(
         F.col(child_col).cast("long").alias("node"),
         F.col(parent_col).cast("long").alias("anc"),
         F.lit(1).alias("d"),
     ).transform(_ckpt)
-    if local_max_edges and ptr.count() <= local_max_edges:
+    if fits_driver("resolve_roots", ptr.count()):
         local = _resolve_roots_local(ptr)
         if local is not None:
             return local

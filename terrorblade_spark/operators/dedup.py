@@ -615,15 +615,24 @@ def incremental_dedup(
     Returns ``(admitted, new_index)``: the batch rows to append (one
     canonical row per new content hash, smallest id wins — deterministic
     under retries, so the writer stays idempotent), and the index rows
-    to add. Plan: one groupBy of (hash, id) within the batch + one
-    left_anti join against the index — the join key is the hash, so AQE
+    to add. Plan: one left_anti join against the index, then a
+    row_number window per hash over the surviving batch rows — both
+    keyed on the hash, so they share one batch-side exchange, and AQE
     broadcasts whichever side is small (a daily batch vs. a bucketed
     index at scale).
     """
     from pyspark.sql import Window
 
     hashed = batch.withColumn("content_hash", hash64(F.col(text_col)))
-
+    if corpus_index is not None:
+        # anti-join BEFORE the window: it drops whole content-hash
+        # groups, so the admitted rows are unchanged, and the window
+        # reuses the join's hash partitioning — against an index
+        # bucketed by hash the batch shuffles once, to the bucket count,
+        # whatever spark.sql.shuffle.partitions is
+        hashed = hashed.join(
+            corpus_index.select("content_hash"), "content_hash", "left_anti"
+        )
     canon = (
         hashed.withColumn(
             "__rk",
@@ -634,10 +643,6 @@ def incremental_dedup(
         .where(F.col("__rk") == 1)
         .drop("__rk")
     )
-    if corpus_index is not None:
-        canon = canon.join(
-            corpus_index.select("content_hash"), "content_hash", "left_anti"
-        )
     return canon, canon.select("content_hash")
 
 

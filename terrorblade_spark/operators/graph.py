@@ -36,25 +36,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import finisher
 from .ckpt import flat_local_checkpoint as _ckpt
-
-
-def _arrow_collect(df: DataFrame):
-    """toPandas with Arrow forced on and the caller's conf restored —
-    the shared guard of every size-gated local finisher (the ~16 B per
-    long-column-row bound assumes Arrow batching; a bare session may
-    not have it enabled)."""
-    spark = df.sparkSession
-    arrow_key = "spark.sql.execution.arrow.pyspark.enabled"
-    prev_arrow = spark.conf.get(arrow_key, None)
-    spark.conf.set(arrow_key, "true")
-    try:
-        return df.toPandas()
-    finally:
-        if prev_arrow is None:
-            spark.conf.unset(arrow_key)
-        else:
-            spark.conf.set(arrow_key, prev_arrow)
+from .finisher import arrow_collect, arrow_frame, fits_driver
 
 
 def pagerank(
@@ -70,7 +54,6 @@ def pagerank(
     reset: DataFrame | None = None,
     check_every: int = 1,
     on_superstep=None,
-    local_max_edges: int = 2_000_000,
 ) -> DataFrame:
     """PageRank over the directed graph ``edges``. Returns
     ``(node_col, rank_col)`` for every node appearing as a source or
@@ -110,38 +93,25 @@ def pagerank(
     it. ``tol=None`` (the default) runs zero driver-side convergence
     actions — prefer it for fixed-budget production runs.
 
-    LOCAL FINISHER (round 10; the kcore ``_local_finish`` recipe):
-    when the prepared link relation holds at most ``local_max_edges``
-    rows — known for free, its materializing count is the existing
-    cache-warming action — and neither ``tol`` nor ``reset`` is set,
-    the ``n_iter`` power iterations run driver-side over numpy arrays
-    instead of as Spark supersteps. A superstep's cluster work is one
-    node-sized join + aggregate, but its FIXED cost (scheduling, the
-    eager lineage-truncating checkpoint, the dangling-mass broadcast)
-    is ~0.2 s per iteration regardless of size — on a 625-edge nation
+    LOCAL FINISHER (operators/finisher.py; the link relation's
+    materializing count is the gate, and ``tol``/``reset`` stay on the
+    distributed path): the ``n_iter`` power iterations run driver-side
+    over numpy arrays. A superstep's FIXED cost (scheduling, the eager
+    lineage-truncating checkpoint, the dangling-mass broadcast) is
+    ~0.2 s per iteration regardless of size — on a 625-edge nation
     graph the 10-superstep loop was pure overhead (measured 3.2 s →
-    0.9 s at sf0.1, identical ranks). The aggregated graphs analytics
-    queries iterate over are routinely bounded (nation x nation here)
-    even when the EDGE-DERIVING relation is 100 TB; the derivation
-    joins stay distributed, only the iteration moves. The collect is
-    Arrow-batched into two int64 + one float64 numpy columns
-    (~24 B/edge, 2 M default ≈ 48 MB — kcore's bounded-collect
-    contract); a web-scale link graph exceeds the bound and runs the
-    distributed supersteps unchanged. Ranks differ from the
+    0.9 s at sf0.1, identical ranks). Ranks differ from the
     distributed path only in float summation order (~1e-16; both
     paths are inside the documented determinism contract, and the
-    equality is unit-gated). ``local_max_edges=0`` forces the
-    distributed path.
+    equality is unit-gated).
     """
     if not 0.0 < damping < 1.0:
         raise ValueError(f"damping must be in (0, 1), got {damping}")
     if check_every < 1:
         raise ValueError(f"check_every must be >= 1, got {check_every}")
-    if local_max_edges < 0:
-        raise ValueError(f"local_max_edges must be >= 0, got {local_max_edges}")
     return _pagerank_impl(
         edges, src, dst, n_iter, damping, node_col, rank_col, tol, weight_col,
-        reset, check_every, on_superstep, local_max_edges,
+        reset, check_every, on_superstep,
     )
 
 
@@ -186,30 +156,14 @@ def _pagerank_local(
     on_superstep,
 ) -> DataFrame:
     """Driver-side power iteration over the collected link relation —
-    the pagerank twin of kcore's ``_local_finish``. Only reached when
-    the caller measured ``links`` under ``local_max_edges`` (see
-    :func:`pagerank`); the collect is Arrow-batched into numpy columns
-    and each iteration is one ``bincount`` contribution sum + the
-    damped update, microseconds at the threshold scale."""
+    each iteration is one ``bincount`` contribution sum + the damped
+    update, microseconds at the finisher bound."""
     import numpy as np
-    import pandas as pd
 
-    # force Arrow for the bounded collect (the caller's session may
-    # not have it on) and restore the caller's conf after — the same
-    # guard as kcore._local_finish
-    arrow_key = "spark.sql.execution.arrow.pyspark.enabled"
-    prev_arrow = spark.conf.get(arrow_key, None)
-    spark.conf.set(arrow_key, "true")
-    try:
-        pdf = links.select("__src", "__dst", "__w").toPandas()
-    finally:
-        if prev_arrow is None:
-            spark.conf.unset(arrow_key)
-        else:
-            spark.conf.set(arrow_key, prev_arrow)
+    pdf = arrow_collect(links.select("__src", "__dst", "__w"))
     schema = f"{node_col} long, {rank_col} double"
     if len(pdf) == 0:
-        return spark.createDataFrame([], schema)
+        return arrow_frame(spark, {}, schema)
     ea = pdf["__src"].to_numpy(dtype=np.int64)
     eb = pdf["__dst"].to_numpy(dtype=np.int64)
     w = pdf["__w"].to_numpy(dtype=np.float64)
@@ -227,9 +181,7 @@ def _pagerank_local(
         rank = (1.0 - damping) * t + damping * (contrib + dm * t)
         if on_superstep is not None:
             on_superstep(it)
-    return spark.createDataFrame(
-        pd.DataFrame({node_col: nodes_arr, rank_col: rank}), schema
-    )
+    return arrow_frame(spark, {node_col: nodes_arr, rank_col: rank}, schema)
 
 
 def _pagerank_impl(
@@ -245,7 +197,6 @@ def _pagerank_impl(
     reset: DataFrame | None,
     check_every: int = 5,
     on_superstep=None,
-    local_max_edges: int = 2_000_000,
 ) -> DataFrame:
     if weight_col is None:
         e = (
@@ -276,19 +227,11 @@ def _pagerank_impl(
     links, deg = _prepare_links(e, k)
     try:
         # materialize: iterations must hit the cache, not the lineage.
-        # The count doubles as the local-finisher gate — when the link
-        # relation fits the bounded-collect contract and no tol/reset
-        # semantics are in play, the power iteration runs driver-side
-        # (see pagerank docstring); tol keeps its exact barrier
-        # semantics and reset its Spark-side normalization by staying
-        # on the distributed path.
+        # The count doubles as the local-finisher gate; tol keeps its
+        # exact barrier semantics and reset its Spark-side
+        # normalization by staying on the distributed path.
         n_links = links.count()
-        if (
-            local_max_edges
-            and tol is None
-            and reset is None
-            and n_links <= local_max_edges
-        ):
+        if tol is None and reset is None and fits_driver("pagerank", n_links):
             return _pagerank_local(
                 spark, links, n_iter, damping, node_col, rank_col, on_superstep
             )
@@ -441,7 +384,6 @@ def random_walks(
     walks_per_node: int = 1,
     seed: str = "walk",
     node_col: str = "node",
-    local_max_edges: int = 2_000_000,
 ) -> DataFrame:
     """Seeded DETERMINISTIC random walks over the directed graph — the
     node2vec/DeepWalk context sampler: every node starts
@@ -468,8 +410,6 @@ def random_walks(
         raise ValueError(f"walk_length must be >= 1, got {walk_length}")
     if walks_per_node < 1:
         raise ValueError(f"walks_per_node must be >= 1, got {walks_per_node}")
-    if local_max_edges < 0:
-        raise ValueError(f"local_max_edges must be >= 0, got {local_max_edges}")
     e = (
         edges.select(
             F.col(src).cast("long").alias("__src"), F.col(dst).cast("long").alias("__dst")
@@ -490,40 +430,31 @@ def random_walks(
         .persist()
     )
     try:
-        return _walk_steps(
-            links, walks_per_node, walk_length, seed, node_col, spark,
-            local_max_edges,
-        )
+        return _walk_steps(links, walks_per_node, walk_length, seed, node_col, spark)
     finally:
         links.unpersist()
 
 
 def _walks_local(links, walks_per_node, walk_length, seed, node_col, spark):
     """Driver-side walk expansion over the collected link relation —
-    the walks twin of ``_pagerank_local``. Only reached when the
-    caller measured the link relation under ``local_max_edges``; the
-    collect is Arrow-batched into two int64 columns and each step is
-    a vectorized gather over a lexsorted adjacency. The draw is the
-    EXACT contract the distributed loop evaluates —
+    each step is a vectorized gather over a lexsorted adjacency. The
+    draw is the EXACT contract the distributed loop evaluates —
     ``hash64(seed/walk_id/step) % out_degree`` — via the same
     15-hex-chars-of-md5 parse (60 bits, no overflow on either side;
     the q71 ``spark_hash_string`` / ``_plane_sign`` twin precedent),
-    so the emitted walks are identical row sets (unit-gated). Round 11
-    vectorized the draw (``md5vec.md5_hash60_draws``: single-block MD5
-    as batched uint32 numpy arithmetic, parity-tested against hashlib)
-    — the per-(walk, step) Python md5 call was the reason this gate
-    sat 10x below the shared 2M-edge bound; the hashlib loop remains
-    only as the fallback for a seed so long the message would need a
-    second MD5 block."""
+    so the emitted walks are identical row sets (unit-gated). The draw
+    is vectorized (``md5vec.md5_hash60_draws``: single-block MD5 as
+    batched uint32 numpy arithmetic, parity-tested against hashlib);
+    the hashlib loop remains only as the fallback for a seed so long
+    the message would need a second MD5 block."""
     import numpy as np
-    import pandas as pd
 
     from terrorblade_spark.operators.md5vec import md5_hash60_draws
 
-    pdf = _arrow_collect(links.select("__src", "__dst"))
+    pdf = arrow_collect(links.select("__src", "__dst"))
     schema = f"walk_id long, step int, {node_col} long"
     if len(pdf) == 0:
-        return spark.createDataFrame([], schema)
+        return arrow_frame(spark, {}, schema)
     src = pdf["__src"].to_numpy(dtype=np.int64)
     dst = pdf["__dst"].to_numpy(dtype=np.int64)
     order = np.lexsort((dst, src))  # rank within src = ascending dst,
@@ -558,31 +489,27 @@ def _walks_local(links, walks_per_node, walk_length, seed, node_col, spark):
         out_w.append(wid)
         out_s.append(np.full(len(wid), t, np.int64))
         out_n.append(cur)
-    return spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "walk_id": np.concatenate(out_w),
-                "step": np.concatenate(out_s).astype(np.int32),
-                node_col: np.concatenate(out_n),
-            }
-        ),
+    return arrow_frame(
+        spark,
+        {
+            "walk_id": np.concatenate(out_w),
+            "step": np.concatenate(out_s).astype(np.int32),
+            node_col: np.concatenate(out_n),
+        },
         schema,
     )
 
 
-def _walk_steps(links, walks_per_node, walk_length, seed, node_col, spark,
-                local_max_edges=2_000_000):
+def _walk_steps(links, walks_per_node, walk_length, seed, node_col, spark):
     from terrorblade_spark.functions.exprs import hash64
 
     n_links = links.count()
-    # LOCAL FINISHER (round 10, the pagerank recipe): each distributed
-    # step is a frontier join + eager checkpoint (~0.25 s of fixed
-    # cost); a bounded link relation walks driver-side instead —
-    # identical output by the gated md5-draw twin. The materializing
-    # count above already existed as the cache-warm action, so the
-    # gate is free; larger graphs run the unchanged superstep loop
-    # (local_max_edges=0 forces it).
-    if local_max_edges and n_links <= local_max_edges:
+    # LOCAL FINISHER (operators/finisher.py): each distributed step is
+    # a frontier join + eager checkpoint (~0.25 s of fixed cost); a
+    # bounded link relation walks driver-side instead — identical
+    # output by the gated md5-draw twin. The materializing count above
+    # already existed as the cache-warm action, so the gate is free.
+    if fits_driver("random_walks", n_links):
         return _walks_local(
             links, walks_per_node, walk_length, seed, node_col, spark
         )
@@ -666,13 +593,12 @@ def _bfs_local(e, seeds_pdf, max_hops, node_col, spark):
     int64 columns, lexsorted adjacency, one vectorized gather per
     hop."""
     import numpy as np
-    import pandas as pd
 
-    pdf = _arrow_collect(e.select("__src", "__dst"))
+    pdf = arrow_collect(e.select("__src", "__dst"))
     schema = f"{node_col} long, distance int"
     seeds_arr = np.unique(seeds_pdf[node_col].to_numpy(dtype=np.int64))
     if len(seeds_arr) == 0:
-        return spark.createDataFrame([], schema)
+        return arrow_frame(spark, {}, schema)
     src = pdf["__src"].to_numpy(dtype=np.int64)
     dst = pdf["__dst"].to_numpy(dtype=np.int64)
     order = np.lexsort((dst, src))
@@ -681,7 +607,7 @@ def _bfs_local(e, seeds_pdf, max_hops, node_col, spark):
     dist = {int(s): 0 for s in seeds_arr}
     frontier = seeds_arr
     for hop in range(1, max_hops + 1):
-        if len(frontier) == 0:
+        if len(frontier) == 0 or len(usrc) == 0:  # no edges: seeds only
             break
         pos = np.searchsorted(usrc, frontier)
         pos_c = np.minimum(pos, len(usrc) - 1)
@@ -701,10 +627,14 @@ def _bfs_local(e, seeds_pdf, max_hops, node_col, spark):
         for n in new:
             dist[n] = hop
         frontier = np.array(new, dtype=np.int64)
-    out = pd.DataFrame(
-        {node_col: list(dist.keys()), "distance": list(dist.values())}
-    ).sort_values(node_col)
-    return spark.createDataFrame(out, schema)
+    return arrow_frame(
+        spark,
+        {
+            node_col: np.fromiter(dist.keys(), np.int64, len(dist)),
+            "distance": np.fromiter(dist.values(), np.int32, len(dist)),
+        },
+        schema,
+    )
 
 
 def bfs_distances(
@@ -714,7 +644,6 @@ def bfs_distances(
     src: str = "src",
     dst: str = "dst",
     node_col: str = "node",
-    local_max_edges: int = 2_000_000,
 ) -> DataFrame:
     """Hop-bounded multi-source BFS over the DIRECTED graph ``edges``:
     for every node reachable from the ``seeds`` relation (``node_col``)
@@ -742,8 +671,6 @@ def bfs_distances(
     """
     if max_hops < 0:
         raise ValueError(f"max_hops must be >= 0, got {max_hops}")
-    if local_max_edges < 0:
-        raise ValueError(f"local_max_edges must be >= 0, got {local_max_edges}")
     spark = edges.sparkSession
     k = int(spark.conf.get("spark.sql.shuffle.partitions"))
     e = (
@@ -757,7 +684,7 @@ def bfs_distances(
     )
     try:
         n_edges = e.count()  # materialize: every hop must hit the cache
-        # LOCAL FINISHER (round 10, the pagerank recipe): each hop is a
+        # LOCAL FINISHER (operators/finisher.py): each hop is a
         # frontier join + anti-join + two checkpoints + an emptiness
         # action (~0.5 s fixed). A bounded edge relation runs the
         # textbook BFS driver-side — identical output (integer frontier
@@ -766,14 +693,14 @@ def bfs_distances(
         # set larger than the edge bound would blow the driver budget
         # the gate exists to protect. The edge count was already the
         # cache-warm action; the seed count is one node-sized job.
-        if local_max_edges and n_edges <= local_max_edges:
+        if fits_driver("bfs_distances", n_edges):
             seeds_small = (
                 seeds.select(F.col(node_col).cast("long").alias(node_col))
                 .where(F.col(node_col).isNotNull())
                 .distinct()
             )
-            seeds_pdf = _arrow_collect(seeds_small.limit(local_max_edges + 1))
-            if len(seeds_pdf) <= local_max_edges:
+            seeds_pdf = arrow_collect(seeds_small.limit(finisher.LOCAL_MAX_EDGES + 1))
+            if fits_driver("bfs_distances.seeds", len(seeds_pdf)):
                 return _bfs_local(e, seeds_pdf, max_hops, node_col, spark)
             # seed set over the bound: fall through to the Pregel loop
         frontier = (
@@ -811,12 +738,11 @@ def _lpa_local(sym, n_iter, node_col, label_col, spark):
     is the identity (synchronous LPA is memoryless), so breaking early
     on stability is exact regardless of ``stop_when_stable``."""
     import numpy as np
-    import pandas as pd
 
-    pdf = _arrow_collect(sym.select("a", "b", "__w"))
+    pdf = arrow_collect(sym.select("a", "b", "__w"))
     schema = f"{node_col} long, {label_col} long"
     if len(pdf) == 0:
-        return spark.createDataFrame([], schema)
+        return arrow_frame(spark, {}, schema)
     a = pdf["a"].to_numpy(dtype=np.int64)
     b = pdf["b"].to_numpy(dtype=np.int64)
     w = pdf["__w"].to_numpy(dtype=np.float64)
@@ -843,9 +769,7 @@ def _lpa_local(sym, n_iter, node_col, label_col, spark):
         if np.array_equal(nxt, lab):
             break  # fixpoint: every later round is the identity
         lab = nxt
-    return spark.createDataFrame(
-        pd.DataFrame({node_col: nodes, label_col: lab}), schema
-    )
+    return arrow_frame(spark, {node_col: nodes, label_col: lab}, schema)
 
 
 def label_propagation(
@@ -858,7 +782,6 @@ def label_propagation(
     label_col: str = "community",
     stop_when_stable: bool = False,
     check_every: int = 1,
-    local_max_edges: int = 2_000_000,
 ) -> DataFrame:
     """Community detection by SYNCHRONOUS label propagation over the
     UNDIRECTED graph induced by ``edges`` (direction dropped, parallel
@@ -906,8 +829,6 @@ def label_propagation(
         raise ValueError(f"n_iter must be >= 0, got {n_iter}")
     if check_every < 1:
         raise ValueError(f"check_every must be >= 1, got {check_every}")
-    if local_max_edges < 0:
-        raise ValueError(f"local_max_edges must be >= 0, got {local_max_edges}")
     w = (
         F.col(weight_col).cast("double")
         if weight_col is not None
@@ -951,14 +872,14 @@ def label_propagation(
     )
     try:
         n_sym = sym.count()  # materialize before iterating
-        # LOCAL FINISHER (round 10, the pagerank recipe): each round is
-        # an edge join + two aggregates + a checkpoint (~0.4 s fixed);
-        # a bounded symmetric relation runs the identical synchronous
+        # LOCAL FINISHER (operators/finisher.py): each round is an edge
+        # join + two aggregates + a checkpoint (~0.4 s fixed); a
+        # bounded symmetric relation runs the identical synchronous
         # update driver-side (see _lpa_local — exact for the
         # integer-weight class the portability contract already
-        # requires; local_max_edges=0 forces the distributed loop).
-        # The count above already existed as the cache-warm action.
-        if local_max_edges and n_sym <= local_max_edges:
+        # requires). The count above already existed as the cache-warm
+        # action.
+        if fits_driver("label_propagation", n_sym):
             return _lpa_local(sym, n_iter, node_col, label_col, spark)
         labels = sym.select(F.col("a").alias(node_col)).distinct().select(
             node_col, F.col(node_col).alias(label_col)
@@ -1105,7 +1026,6 @@ def kcore(
     max_rounds: int = 100_000,
     checkpoint_every: int = 1,
     fold_every: int = 16,
-    local_max_edges: int = 2_000_000,
     delta_max_pend: int = 65_536,
 ) -> DataFrame:
     """Members of the k-core of the UNDIRECTED simple graph induced by
@@ -1160,22 +1080,20 @@ def kcore(
     one cheap step per hop. ``max_rounds`` remains as a runaway
     safety valve only.
 
-    LOCAL FINISHER (what actually bounds round COUNT): a tiny-frontier
-    cascade is inherently sequential — a path graph peels two nodes
-    per hop, and no bulk-synchronous engine can shortcut that wave.
-    So whenever the SURVIVING subgraph fits ``local_max_edges``
-    (checked from the degree relation at every fold boundary — its
-    edge count is sum(deg)/2, no extra scan of the adjacency), the
-    remaining edges are collected and the cascade finishes driver-side
-    with the textbook O(E) queue peel. Distributed rounds therefore
-    run only while the remainder is genuinely large: a 1M-node path
-    never runs a distributed step at all (1M edges <= the 2M default),
-    while a web-scale graph peels distributed until its dense core
-    region — which no driver could hold — is decided, and typically
-    converges to empty-frontier long before the remainder fits. The
-    collect is bounded by the threshold (2M edges ~ 32 MB), the same
-    contract as the codebook/manifest collects elsewhere in this
-    package.
+    LOCAL FINISHER (operators/finisher.py; what actually bounds round
+    COUNT): a tiny-frontier cascade is inherently sequential — a path
+    graph peels two nodes per hop, and no bulk-synchronous engine can
+    shortcut that wave. So whenever the SURVIVING subgraph fits the
+    finisher bound (checked from the degree relation at every fold
+    boundary — its edge count is sum(deg)/2, no extra scan of the
+    adjacency), the remaining edges are collected and the cascade
+    finishes driver-side with the textbook O(E) queue peel — the same
+    peel, so the same members and core degrees. Distributed rounds
+    therefore run only while the remainder is genuinely large: a
+    1M-node path never runs a distributed step at all, while a
+    web-scale graph peels distributed until its dense core region —
+    which no driver could hold — is decided, and typically converges
+    to empty-frontier long before the remainder fits.
 
     Why removal needs no edge rewrite: frontiers are DISJOINT across
     steps, so an edge contributes a decrement exactly once per
@@ -1193,8 +1111,6 @@ def kcore(
         raise ValueError(f"checkpoint_every must be >= 1, got {checkpoint_every}")
     if fold_every < 1:
         raise ValueError(f"fold_every must be >= 1, got {fold_every}")
-    if local_max_edges < 0:
-        raise ValueError(f"local_max_edges must be >= 0, got {local_max_edges}")
     spark = edges.sparkSession
     nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     und = (
@@ -1231,14 +1147,10 @@ def kcore(
         return int(row["s"] or 0) // 2, int(row["n"])
 
     def _local_finish(deg: DataFrame) -> DataFrame:
-        """Collect the surviving subgraph (bounded by local_max_edges)
-        and run the textbook O(E) queue peel driver-side — the only
-        way to bound ROUND count on a tiny-frontier cascade, which is
-        inherently sequential. The collect is Arrow-batched into two
-        int64 numpy columns (~16 B/edge — 2M edges ~ 32 MB, matching
-        the documented bound) and peeled over a CSR adjacency; Python
-        Row objects / dict-of-list adjacency would cost 1-2 orders of
-        magnitude more driver memory at the threshold."""
+        """Collect the surviving subgraph and run the textbook O(E)
+        queue peel driver-side over a CSR adjacency; Python Row
+        objects / dict-of-list adjacency would cost 1-2 orders of
+        magnitude more driver memory at the finisher bound."""
         from collections import deque
 
         import numpy as np
@@ -1251,22 +1163,10 @@ def kcore(
             .where(F.col("a") < F.col("b"))
             .select("a", "b")
         )
-        # the ~16 B/edge bound assumes Arrow-batched toPandas; kcore runs
-        # on whatever session the caller's edges carry (the package's
-        # get_spark enables Arrow, a bare session may not), so force it
-        # for this collect and restore the caller's setting after
-        arrow_key = "spark.sql.execution.arrow.pyspark.enabled"
-        prev_arrow = spark.conf.get(arrow_key, None)
-        spark.conf.set(arrow_key, "true")
-        try:
-            pdf = plan.toPandas()
-        finally:
-            if prev_arrow is None:
-                spark.conf.unset(arrow_key)
-            else:
-                spark.conf.set(arrow_key, prev_arrow)
+        pdf = arrow_collect(plan)
+        schema = f"{node_col} long, core_degree long"
         if len(pdf) == 0:
-            return spark.createDataFrame([], f"{node_col} long, core_degree long")
+            return arrow_frame(spark, {}, schema)
         ea = pdf["a"].to_numpy(dtype=np.int64)
         eb = pdf["b"].to_numpy(dtype=np.int64)
         # dense-relabel nodes -> 0..n-1, then CSR over both directions
@@ -1292,13 +1192,12 @@ def kcore(
                     degs[v] -= 1
                     if degs[v] == k - 1:  # just dropped below k: enqueue once
                         queue.append(int(v))
-        import pandas as pd
-
         alive = ~removed
-        out_pdf = pd.DataFrame(
-            {node_col: nodes_arr[alive], "core_degree": degs[alive].astype(np.int64)}
+        return arrow_frame(
+            spark,
+            {node_col: nodes_arr[alive], "core_degree": degs[alive].astype(np.int64)},
+            schema,
         )
-        return spark.createDataFrame(out_pdf, f"{node_col} long, core_degree long")
 
     def _union_all(dfs: list[DataFrame]) -> DataFrame:
         """The 'peeled since last fold' relation: union of the recent
@@ -1332,7 +1231,7 @@ def kcore(
             .transform(_ckpt)
         )
         surv_edges, deg_n = _deg_stats(deg)
-        if surv_edges <= local_max_edges:
+        if fits_driver("kcore", surv_edges):
             return _local_finish(deg)
         frontier = deg.where(F.col("__deg") < k).select(node_col).transform(_ckpt)
         pend: DataFrame | None = None
@@ -1406,7 +1305,7 @@ def kcore(
                 rec_n = 0
                 since_fold = 0
                 surv_edges, deg_n = _deg_stats(deg)
-                if surv_edges <= local_max_edges:
+                if fits_driver("kcore", surv_edges):
                     return _local_finish(deg)
                 # the folded relation holds every un-peeled node at its
                 # true degree, so the next frontier is a plain filter —

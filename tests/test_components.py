@@ -7,6 +7,7 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from terrorblade_spark.operators import finisher
 from terrorblade_spark.operators.components import (
     connected_components,
     near_dup_components,
@@ -76,7 +77,7 @@ def test_components_match_union_find(spark, edges):
     assert _cc(spark, edges) == _union_find(edges)
 
 
-def test_local_finisher_matches_distributed_loop(spark):
+def test_local_finisher_matches_distributed_loop(spark, monkeypatch):
     # the size-gated driver finisher and the large/small-star loop must
     # label identically: cliques + a long path (adversarial for min
     # propagation) + an out-of-order chain
@@ -86,17 +87,31 @@ def test_local_finisher_matches_distributed_loop(spark):
         + [(205, 203), (201, 205), (203, 209)]
     )
     df = spark.createDataFrame(pairs, "id_a long, id_b long")
-    local = {
-        r["node"]: r["component"]
-        for r in connected_components(df, "id_a", "id_b").collect()
-    }
-    dist = {
-        r["node"]: r["component"]
-        for r in connected_components(
-            df, "id_a", "id_b", local_max_edges=0
-        ).collect()
-    }
-    assert local == dist == _union_find(pairs)
+
+    def run():
+        return {
+            r["node"]: r["component"]
+            for r in connected_components(df, "id_a", "id_b").collect()
+        }
+
+    local = run()
+    monkeypatch.setattr(finisher, "LOCAL_MAX_EDGES", 0)
+    assert local == run() == _union_find(pairs)
+
+
+def test_finisher_logs_one_decision_per_gate(spark, monkeypatch, caplog):
+    # one record per gate — operator, size, bound, path — on the
+    # finisher logger, for the default bound and the forced-distributed one
+    df = spark.createDataFrame([(1, 2), (2, 3), (3, 2)], "id_a long, id_b long")
+    caplog.set_level("INFO", logger=finisher.__name__)
+    connected_components(df, "id_a", "id_b").collect()
+    monkeypatch.setattr(finisher, "LOCAL_MAX_EDGES", 0)
+    connected_components(df, "id_a", "id_b").collect()
+    msgs = [r.getMessage() for r in caplog.records if r.name == finisher.__name__]
+    assert msgs == [
+        "finisher op=connected_components size=3 bound=2000000 path=local",
+        "finisher op=connected_components size=3 bound=0 path=distributed",
+    ]
 
 
 def test_near_dup_components_on_duplicated_corpus(spark):
@@ -247,7 +262,7 @@ def test_resolve_roots_raises_on_cycle(spark):
         resolve_roots(edges, max_rounds=6)
 
 
-def test_resolve_roots_null_edges_local_matches_distributed(spark):
+def test_resolve_roots_null_edges_local_matches_distributed(spark, monkeypatch):
     """ADVICE r10 (high): a null child/parent must NOT become a
     fabricated INT64_MIN node in the local finisher — it falls through
     to the distributed loop, whose null-drop semantics are the
@@ -259,14 +274,14 @@ def test_resolve_roots_null_edges_local_matches_distributed(spark):
         [(2, 1), (3, 2), (None, 7), (8, None), (11, 10)],
         "child long, parent long",
     )
-    local = {
-        r["node"]: (r["root"], r["depth"]) for r in resolve_roots(edges).collect()
-    }
-    dist = {
-        r["node"]: (r["root"], r["depth"])
-        for r in resolve_roots(edges, local_max_edges=0).collect()
-    }
-    assert local == dist
+    def run():
+        return {
+            r["node"]: (r["root"], r["depth"]) for r in resolve_roots(edges).collect()
+        }
+
+    local = run()
+    monkeypatch.setattr(finisher, "LOCAL_MAX_EDGES", 0)
+    assert local == run()
     # no fabricated node ids: INT64_MIN never appears (a None node is
     # the distributed loop's own null handling, kept as-is)
     assert all(n is None or n > -(2**62) for n in local)
@@ -278,7 +293,7 @@ def test_resolve_roots_null_edges_local_matches_distributed(spark):
     assert _resolve_roots_local(ptr) is None
 
 
-def test_resolve_roots_local_matches_distributed(spark):
+def test_resolve_roots_local_matches_distributed(spark, monkeypatch):
     # chains + branches + isolated subtrees, ids deliberately sparse
     # and out of order; the size-gated driver finisher and the pointer-
     # doubling loop must agree row for row (integer algorithm)
@@ -290,20 +305,20 @@ def test_resolve_roots_local_matches_distributed(spark):
     edges = spark.createDataFrame(pairs, "child long, parent long")
     from terrorblade_spark.operators.components import resolve_roots
 
-    local = {
-        r["node"]: (r["root"], r["depth"])
-        for r in resolve_roots(edges).collect()
-    }
-    dist = {
-        r["node"]: (r["root"], r["depth"])
-        for r in resolve_roots(edges, local_max_edges=0).collect()
-    }
-    assert local == dist
+    def run():
+        return {
+            r["node"]: (r["root"], r["depth"])
+            for r in resolve_roots(edges).collect()
+        }
+
+    local = run()
+    monkeypatch.setattr(finisher, "LOCAL_MAX_EDGES", 0)
+    assert local == run()
     assert local[59] == (0, 59) and local[114] == (100, 3)
     assert local[901] == (909, 3) and local[909] == (909, 0)
 
 
-def test_resolve_roots_local_fallthrough_on_duplicate_child(spark):
+def test_resolve_roots_local_fallthrough_on_duplicate_child(spark, monkeypatch):
     # a node with two parents is not a clean forest: the local path
     # must decline and the distributed loop's (convergent) multi-root
     # output must come back unchanged
@@ -312,12 +327,12 @@ def test_resolve_roots_local_fallthrough_on_duplicate_child(spark):
     edges = spark.createDataFrame(
         [(1, 2), (1, 3)], "child long, parent long"
     )
-    rows = sorted(
-        (r["node"], r["root"], r["depth"])
-        for r in resolve_roots(edges).collect()
-    )
-    dist = sorted(
-        (r["node"], r["root"], r["depth"])
-        for r in resolve_roots(edges, local_max_edges=0).collect()
-    )
-    assert rows == dist
+    def run():
+        return sorted(
+            (r["node"], r["root"], r["depth"])
+            for r in resolve_roots(edges).collect()
+        )
+
+    rows = run()
+    monkeypatch.setattr(finisher, "LOCAL_MAX_EDGES", 0)
+    assert rows == run()

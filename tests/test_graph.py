@@ -5,6 +5,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
+from terrorblade_spark.operators import finisher
 from terrorblade_spark.operators.graph import indegree_profile, pagerank
 
 
@@ -106,7 +107,7 @@ def test_pagerank_tol_on_converged_graph_equals_fixed_iter(spark):
     assert early == fixed == {1: 0.5, 2: 0.5}
 
 
-def test_pagerank_tol_driver_barrier_amortized(spark):
+def test_pagerank_tol_driver_barrier_amortized(spark, monkeypatch):
     """tol=None runs ZERO convergence-probe driver actions inside the
     loop; with tol set, exactly one probe job fires per check_every
     supersteps — counted via job groups against the tol=None floor."""
@@ -114,14 +115,15 @@ def test_pagerank_tol_driver_barrier_amortized(spark):
         [(1, 2), (2, 3), (3, 1), (1, 3)], "src long, dst long"
     )
     sc = spark.sparkContext
+    # the probe-count contract under test is a property of the
+    # DISTRIBUTED superstep loop (the local finisher runs zero probe
+    # jobs by construction)
+    monkeypatch.setattr(finisher, "LOCAL_MAX_EDGES", 0)
 
     def jobs_for(group, **kw):
         sc.setJobGroup(group, group)
         try:
-            # local_max_edges=0: the probe-count contract under test is
-            # a property of the DISTRIBUTED superstep loop (the local
-            # finisher runs zero probe jobs by construction)
-            pagerank(e, n_iter=4, local_max_edges=0, **kw).count()
+            pagerank(e, n_iter=4, **kw).count()
             return len(sc.statusTracker().getJobIdsForGroup(group))
         finally:
             sc.setJobGroup("", "")
@@ -137,33 +139,29 @@ def test_pagerank_tol_driver_barrier_amortized(spark):
     assert (every4 - base) * 2 <= (every1 - base)
 
 
-def test_pagerank_local_finisher_matches_distributed(spark):
-    """Round-10 local finisher: under local_max_edges the power
-    iteration runs driver-side; ranks must match the distributed
-    superstep loop to float-summation precision on the same graph —
-    plain AND weighted — and local_max_edges=0 must force the
-    distributed path."""
+def test_pagerank_local_finisher_matches_distributed(spark, monkeypatch):
+    """Local finisher: under the finisher bound the power iteration
+    runs driver-side; ranks must match the distributed superstep loop
+    to float-summation precision on the same graph — plain AND
+    weighted — and a bound of 0 must force the distributed path."""
     rng = np.random.RandomState(11)
     edges = {(int(rng.randint(0, 40)), int(rng.randint(0, 40))) for _ in range(150)}
     e = spark.createDataFrame(sorted(edges), "src long, dst long")
-    local = _ranks(pagerank(e, n_iter=10))                      # default: local
-    dist = _ranks(pagerank(e, n_iter=10, local_max_edges=0))    # forced distributed
-    assert set(local) == set(dist)
-    for v in dist:
-        assert local[v] == pytest.approx(dist[v], abs=1e-12)
-    assert sum(local.values()) == pytest.approx(1.0, abs=1e-9)
-
     we = spark.createDataFrame(
         [(u, v, 1.0 + ((u * 7 + v) % 5)) for u, v in sorted(edges)],
         "src long, dst long, w double",
     )
+    local = _ranks(pagerank(e, n_iter=10))                      # default: local
     local_w = _ranks(pagerank(we, n_iter=8, weight_col="w"))
-    dist_w = _ranks(pagerank(we, n_iter=8, weight_col="w", local_max_edges=0))
+    monkeypatch.setattr(finisher, "LOCAL_MAX_EDGES", 0)
+    dist = _ranks(pagerank(e, n_iter=10))                       # forced distributed
+    dist_w = _ranks(pagerank(we, n_iter=8, weight_col="w"))
+    assert set(local) == set(dist)
+    for v in dist:
+        assert local[v] == pytest.approx(dist[v], abs=1e-12)
+    assert sum(local.values()) == pytest.approx(1.0, abs=1e-9)
     for v in dist_w:
         assert local_w[v] == pytest.approx(dist_w[v], abs=1e-12)
-
-    with pytest.raises(ValueError, match="local_max_edges"):
-        pagerank(e, local_max_edges=-1)
 
 
 def test_pagerank_local_finisher_skipped_for_tol_and_reset(spark):
@@ -465,7 +463,7 @@ def test_kcore_matches_bruteforce(spark):
 def test_kcore_path_graph_converges(spark):
     """The round-7 design RAISED on deep peel cascades (max_rounds=64;
     a path graph's peel depth is O(n)). The local finisher bounds round
-    count: a 1k-node path (999 edges <= local_max_edges) never runs a
+    count: a 1k-node path (999 edges, under the finisher bound) never runs a
     distributed step and fully peels to the empty 2-core."""
     from terrorblade_spark.operators.graph import kcore
 
@@ -476,8 +474,8 @@ def test_kcore_path_graph_converges(spark):
     assert kcore(e, 2).count() == 0
 
 
-def test_kcore_distributed_cascade_matches_local(spark):
-    """local_max_edges=0 forces the distributed frontier-cascade on a
+def test_kcore_distributed_cascade_matches_local(spark, monkeypatch):
+    """A finisher bound of 0 forces the distributed frontier-cascade on a
     graph with both a surviving core (K5) and a deep-ish peel tail;
     results are identical to the default local path, and a pure path
     converges to empty instead of raising (the pre-round-8 behavior
@@ -489,14 +487,15 @@ def test_kcore_distributed_cascade_matches_local(spark):
     ]
     e = spark.createDataFrame(edges, "src long, dst long")
     dflt = sorted(map(tuple, kcore(e, 3).collect()))
-    dist = sorted(map(tuple, kcore(e, 3, local_max_edges=0).collect()))
+    monkeypatch.setattr(finisher, "LOCAL_MAX_EDGES", 0)
+    dist = sorted(map(tuple, kcore(e, 3).collect()))
     assert dflt == dist == [(0, 4), (1, 4), (2, 4), (3, 4), (4, 4)]
 
     p = spark.createDataFrame([(i, i + 1) for i in range(12)], "src long, dst long")
-    assert kcore(p, 2, local_max_edges=0).count() == 0
+    assert kcore(p, 2).count() == 0
 
 
-def test_kcore_distributed_fold_every_identical(spark):
+def test_kcore_distributed_fold_every_identical(spark, monkeypatch):
     """fold_every only changes when pending decrements fold into the
     degree relation — never the result (gated across the cascade's
     fold boundary)."""
@@ -507,14 +506,13 @@ def test_kcore_distributed_fold_every_identical(spark):
         "src long, dst long",
     )
     base = sorted(map(tuple, kcore(e, k=4).collect()))
+    monkeypatch.setattr(finisher, "LOCAL_MAX_EDGES", 0)
     for fe in (1, 3):
-        got = sorted(
-            map(tuple, kcore(e, k=4, local_max_edges=0, fold_every=fe).collect())
-        )
+        got = sorted(map(tuple, kcore(e, k=4, fold_every=fe).collect()))
         assert got == base, fe
 
 
-def test_kcore_delta_branch_cycle_with_tail(spark):
+def test_kcore_delta_branch_cycle_with_tail(spark, monkeypatch):
     """Exercises the BETWEEN-FOLD recovery branch, which every other
     fixture skips: their first pend trips the size trigger (pend*8 >=
     deg rows) and folds immediately, so the pend-join + recents
@@ -530,10 +528,8 @@ def test_kcore_delta_branch_cycle_with_tail(spark):
     tail = [(0, n), (n, n + 1)] + [(n + i, n + i + 1) for i in range(1, 11)]
     und = {tuple(sorted(p)) for p in cyc + tail}
     e = spark.createDataFrame(sorted(und), "src long, dst long")
-    got = {
-        r["node"]: r["core_degree"]
-        for r in kcore(e, 2, local_max_edges=0, fold_every=64).collect()
-    }
+    monkeypatch.setattr(finisher, "LOCAL_MAX_EDGES", 0)
+    got = {r["node"]: r["core_degree"] for r in kcore(e, 2, fold_every=64).collect()}
     assert got == _py_kcore(und, 2)
     assert len(got) == n  # the cycle survives, the whole tail peels
 
@@ -652,7 +648,7 @@ def test_lpa_zero_iters_identity_and_parallel_edges(spark):
     assert _labels(label_propagation(e, n_iter=1))[2] == 1
 
 
-def test_lpa_stop_when_stable_exact_and_early(spark):
+def test_lpa_stop_when_stable_exact_and_early(spark, monkeypatch):
     """Two triangles + bridge converge in a few rounds; with
     stop_when_stable a 20-round budget returns the SAME labels as the
     fixed 20-round run while running far fewer jobs (counted via job
@@ -671,19 +667,20 @@ def test_lpa_stop_when_stable_exact_and_early(spark):
         finally:
             sc.setJobGroup("", "")
 
-    # local_max_edges=0: the early-stop contract is a property of the
-    # DISTRIBUTED round loop (the round-10 local finisher computes the
-    # same labels with no per-round jobs to save — gated separately by
+    # the early-stop contract is a property of the DISTRIBUTED round
+    # loop (the local finisher computes the same labels with no
+    # per-round jobs to save — gated separately by
     # test_lpa_local_matches_distributed)
-    fixed, fixed_jobs = run("lpa-fixed", local_max_edges=0)
-    early, early_jobs = run("lpa-early", stop_when_stable=True, local_max_edges=0)
+    monkeypatch.setattr(finisher, "LOCAL_MAX_EDGES", 0)
+    fixed, fixed_jobs = run("lpa-fixed")
+    early, early_jobs = run("lpa-early", stop_when_stable=True)
     assert early == fixed
     # converged by ~round 3; 20 fixed rounds must cost well over the
     # early-stopped run even counting the probe jobs
     assert early_jobs < fixed_jobs
 
 
-def test_lpa_stop_when_stable_check_every_amortized(spark):
+def test_lpa_stop_when_stable_check_every_amortized(spark, monkeypatch):
     """The convergence probe fires every check_every rounds: on a
     graph that does NOT converge within the budget, check_every=5 runs
     fewer probe jobs than check_every=1, and both return the exact
@@ -701,11 +698,12 @@ def test_lpa_stop_when_stable_check_every_amortized(spark):
         finally:
             sc.setJobGroup("", "")
 
-    # local_max_edges=0: probe amortization is distributed-loop
-    # machinery (see test_lpa_stop_when_stable_exact_and_early)
-    fixed, _ = run("lpa-ce-fixed", local_max_edges=0)
-    g1, j1 = run("lpa-ce1", stop_when_stable=True, check_every=1, local_max_edges=0)
-    g5, j5 = run("lpa-ce5", stop_when_stable=True, check_every=5, local_max_edges=0)
+    # probe amortization is distributed-loop machinery (see
+    # test_lpa_stop_when_stable_exact_and_early)
+    monkeypatch.setattr(finisher, "LOCAL_MAX_EDGES", 0)
+    fixed, _ = run("lpa-ce-fixed")
+    g1, j1 = run("lpa-ce1", stop_when_stable=True, check_every=1)
+    g5, j5 = run("lpa-ce5", stop_when_stable=True, check_every=5)
     assert g1 == fixed and g5 == fixed
     assert j5 < j1
 
@@ -738,7 +736,7 @@ def test_kcore_checkpoint_every_identical_results(spark):
 # --- round-10 local finishers: local == distributed --------------------------
 
 
-def test_walks_local_matches_distributed(spark):
+def test_walks_local_matches_distributed(spark, monkeypatch):
     """The size-gated driver finisher must emit the identical row set
     as the superstep loop (same md5 draw contract) — including
     dangling stops and multi-rep walk ids."""
@@ -751,33 +749,50 @@ def test_walks_local_matches_distributed(spark):
     )
     e = spark.createDataFrame(edges, "src long, dst long")
     kw = dict(walk_length=5, walks_per_node=2, seed="ab")
-    local = sorted(
-        (r["walk_id"], r["step"], r["node"]) for r in random_walks(e, **kw).collect()
-    )
-    dist = sorted(
-        (r["walk_id"], r["step"], r["node"])
-        for r in random_walks(e, local_max_edges=0, **kw).collect()
-    )
-    assert local == dist
+
+    def run():
+        return sorted(
+            (r["walk_id"], r["step"], r["node"]) for r in random_walks(e, **kw).collect()
+        )
+
+    local = run()
+    monkeypatch.setattr(finisher, "LOCAL_MAX_EDGES", 0)
+    assert local == run()
 
 
-def test_bfs_local_matches_distributed(spark):
+def test_bfs_local_matches_distributed(spark, monkeypatch):
     from terrorblade_spark.operators.graph import bfs_distances
 
     edges = [(1, 2), (2, 3), (3, 4), (10, 4), (4, 1), (5, 6), (77, 1)]
     e = spark.createDataFrame(edges, "src long, dst long")
     seeds = spark.createDataFrame([(1,), (10,), (99,)], "node long")
 
-    def run(**kw):
+    def run():
         return {
             r["node"]: r["distance"]
-            for r in bfs_distances(e, seeds, max_hops=3, **kw).collect()
+            for r in bfs_distances(e, seeds, max_hops=3).collect()
         }
 
-    assert run() == run(local_max_edges=0)
+    local = run()
+    monkeypatch.setattr(finisher, "LOCAL_MAX_EDGES", 0)
+    assert local == run()
 
 
-def test_lpa_local_matches_distributed(spark):
+def test_bfs_empty_edges_local_matches_distributed(spark, monkeypatch):
+    # no edges at all: both branches return the seeds at distance 0
+    from terrorblade_spark.operators.graph import bfs_distances
+
+    e = spark.createDataFrame([], "src long, dst long")
+
+    def run():
+        return _dist(bfs_distances(e, _seeds(spark, 1, 2), max_hops=3))
+
+    local = run()
+    monkeypatch.setattr(finisher, "LOCAL_MAX_EDGES", 0)
+    assert local == run() == {1: 0, 2: 0}
+
+
+def test_lpa_local_matches_distributed(spark, monkeypatch):
     from terrorblade_spark.operators.graph import label_propagation
 
     tri1 = [(1, 2), (2, 3), (1, 3)]
@@ -786,12 +801,12 @@ def test_lpa_local_matches_distributed(spark):
     weights = [(a, b, float((a * 7 + b) % 5 + 1)) for a, b in tri1 + tri2 + bridge]
     e = spark.createDataFrame(weights, "src long, dst long, w double")
 
-    def run(**kw):
+    def run():
         return {
             r["node"]: r["community"]
-            for r in label_propagation(
-                e, n_iter=4, weight_col="w", **kw
-            ).collect()
+            for r in label_propagation(e, n_iter=4, weight_col="w").collect()
         }
 
-    assert run() == run(local_max_edges=0)
+    local = run()
+    monkeypatch.setattr(finisher, "LOCAL_MAX_EDGES", 0)
+    assert local == run()

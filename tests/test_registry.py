@@ -60,19 +60,45 @@ def test_all_oracles_parse(duck):
     assert bad == []
 
 
+_SPOT = [
+    "q01_pricing_summary",   # relational
+    "q12_event_window_columns",   # windows
+    "q19_session_assignment",     # sessions
+    "q26_text_profile",           # text
+    "q31_exact_dedup",            # dedup
+    "q36_cosine_topk",            # vector
+]
+# one query per driver-local graph finisher (operators/finisher.py),
+# each checked at the default bound and with the bound forced to 0 so
+# the distributed branch meets the oracle too
+_FINISHED = [
+    "q78_neardup_components",        # connected_components
+    "q79_event_thread_roots",        # resolve_roots
+    "q104_nation_trade_pagerank",    # pagerank
+    "q110_weighted_trade_pagerank",  # weighted pagerank
+    "q105_trade_graph_walks",        # random_walks
+    "q109_trade_kcore",              # kcore
+    "q114_copurchase_reach",         # bfs_distances
+    "q115_trade_communities",        # label_propagation
+]
+
+
 @pytest.mark.parametrize(
-    "name",
-    [
-        "q01_pricing_summary",   # relational
-        "q12_event_window_columns",   # windows
-        "q19_session_assignment",     # sessions
-        "q26_text_profile",           # text
-        "q31_exact_dedup",            # dedup
-        "q36_cosine_topk",            # vector
+    "name, max_edges",
+    [pytest.param(n, None, id=n) for n in _SPOT]
+    + [
+        pytest.param(n, b, id=f"{n}-{'default' if b is None else 'bound0'}")
+        for n in _FINISHED
+        for b in (None, 0)
     ],
 )
-def test_spot_query_matches_oracle(spark, duck, sf_dir, name):
+def test_spot_query_matches_oracle(spark, duck, sf_dir, monkeypatch, name, max_edges):
     import sys
+
+    from terrorblade_spark.operators import finisher
+
+    if max_edges is not None:
+        monkeypatch.setattr(finisher, "LOCAL_MAX_EDGES", max_edges)
 
     sys.path.insert(0, "/root/repo/tools")
     from check_oracle import compare
